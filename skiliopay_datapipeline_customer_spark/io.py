@@ -104,8 +104,12 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
         # and rendering the optimized plan cost ~0.35 s per call (the
         # optimizer run + toString) vs ~0.02 s here — per-query fixed cost
         # on every kernel path that uses fan_out.
+        # SQL DISTINCT/EXCEPT/INTERSECT analyze as Distinct/Except/
+        # Intersect; the optimizer only later rewrites them to
+        # Aggregate/Join
         shuffle_nodes = (
             "Join", "Aggregate", "Window", "Sort", "Repartition", "Deduplicate",
+            "Distinct", "Except", "Intersect",
         )
         logical = df._jdf.queryExecution().analyzed().toString()
         if any(tok in logical for tok in shuffle_nodes):
@@ -130,13 +134,16 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
             import os as _os
             from urllib.parse import urlparse
 
-            try:
-                total = sum(
-                    _os.path.getsize(urlparse(f).path or f) for f in files
-                )
-            except (OSError, ValueError):
-                # non-local scheme (s3/hdfs) — fall through to the probe
-                total = None
+            total = None
+            # non-local scheme (s3/hdfs) — fall through to the probe, even
+            # when the same path happens to exist on the driver's disk
+            if all(urlparse(f).scheme in ("", "file") for f in files):
+                try:
+                    total = sum(
+                        _os.path.getsize(urlparse(f).path or f) for f in files
+                    )
+                except (OSError, ValueError):
+                    pass  # vanished or unreadable local file — probe instead
             if total is not None:
                 if total >= target * (4 << 20):
                     return df

@@ -159,7 +159,7 @@ def minhash_band_buckets(
     if num_hashes % bands:
         # a remainder would silently drop the trailing hashes from every
         # bucket — the effective signature wouldn't be what the caller asked
-        # for (same contract as train_pq_codebooks' dim % m check)
+        # for (same contract as pq_codebooks' dim % m check)
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
         )

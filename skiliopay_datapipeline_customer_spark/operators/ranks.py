@@ -359,8 +359,16 @@ def _range_bucketed(df: DataFrame, order_spec, num_partitions: int | None):
     # parse the whole when-tree JVM-side, drop the temps (the projection
     # collapses — `bucketed` keeps the caller's schema + `_pid`, and the
     # Column builder remains the reference implementation and the
-    # fallback for boundary types _sql_lit can't render exactly)
-    names = [f"__rk{i}" for i in range(len(norm))]
+    # fallback for boundary types _sql_lit can't render exactly). Temp
+    # names avoid df.columns: a same-named caller column would be
+    # replaced by the key projection and then dropped with the temps.
+    taken = set(df.columns)
+    names = []
+    i = 0
+    while len(names) < len(norm):
+        if f"__rk{i}" not in taken:
+            names.append(f"__rk{i}")
+        i += 1
     pid_sql = _bucket_pid_sql(names, norm, bnds)
     if pid_sql is not None:
         keyed = df

@@ -14,20 +14,11 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ranks import _sql_lit
+
 
 def as_double(vec):
     return F.transform(vec, lambda x: x.cast("double"))
-
-
-def _dlit(x: float) -> str:
-    """Exact SQL double literal. repr() is CPython's shortest round-trip
-    decimal, and Java's Double.parseDouble of that string returns the
-    identical bits (both are correctly-rounded nearest-double parses of a
-    string that uniquely identifies the value), so the parsed literal ==
-    F.lit(x) bit-for-bit. The D suffix forces DoubleType (a bare decimal
-    is DECIMAL in Spark SQL; bare exponent form is already double, but the
-    suffix keeps every shape unambiguous)."""
-    return repr(float(x)).upper() + "D"
 
 
 def _bucket_fold_sql(vec_sql: str, planes: list[list[float]]) -> str:
@@ -46,7 +37,7 @@ def _bucket_fold_sql(vec_sql: str, planes: list[list[float]]) -> str:
     implementation and the property tests compare the two forms."""
     terms = []
     for local_bit, plane in enumerate(planes):
-        arr = "array(" + ",".join(_dlit(v) for v in plane) + ")"
+        arr = "array(" + ",".join(_sql_lit(v) for v in plane) + ")"
         proj = (
             f"aggregate(zip_with({vec_sql}, {arr}, (x, h) -> x * h), "
             "0.0D, (acc, v) -> acc + v)"
@@ -223,76 +214,6 @@ def lsh_topk(
 
 def _lit_vec(values: list[float]):
     return F.array(*[F.lit(float(x)) for x in values])
-
-
-def choose_centroids(
-    df: DataFrame, n_centroids: int = 8, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> list[list[float]]:
-    """IVF coarse centroids via deterministic hash-order sample.
-
-    A k-means refinement would lower variance, but a seeded sample is
-    reproducible, one small job, and recall differences wash out once
-    n_probe > 1. The centroid set is model-sized (C × dim floats) — it lives
-    on the driver and broadcasts into expressions, like any fitted model.
-    """
-    rows = (
-        df.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(n_centroids)
-        .select(vec_col)
-        .collect()
-    )
-    return [[float(x) for x in r[0]] for r in rows]
-
-
-def ivf_assign(vec_col, centroids: list[list[float]]):
-    """Nearest-centroid id (max cosine) as a pure map-side expression:
-    no shuffle, no UDF — the corpus is scanned once and each row computes
-    C inlined dot products inside codegen."""
-    v = as_double(vec_col)
-    sims = F.array(*[cosine(v, _lit_vec(c)) for c in centroids])
-    # argmax: position of the max (1-based); ties → first occurrence
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec_df: DataFrame,
-    k: int = 10,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: list[list[float]] | None = None,
-    refine_iters: int = 0,
-) -> DataFrame:
-    """IVF ANN top-k: scan only the n_probe inverted lists nearest to the
-    query. At 100 TB, write the corpus partitioned by `_centroid` so a probe
-    is a partition-pruned scan of ~n_probe/C of the data; recall grows with
-    n_probe (n_probe=C ≡ exact brute force). ``refine_iters`` > 0 runs that
-    many Lloyd rounds on the coarse centroids before assignment."""
-    import math
-
-    cents = centroids or choose_centroids(df, n_centroids, vec_col, id_col)
-    if refine_iters > 0:
-        cents = kmeans_refine_centroids(df, cents, vec_col, n_iters=refine_iters)
-    qrow = query_vec_df.select(vec_col).first()
-    qvec = [float(x) for x in qrow[0]]
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    probe = sorted(range(len(cents)), key=lambda i: -_cos(qvec, cents[i]))[:n_probe]
-    assigned = df.withColumn("_centroid", ivf_assign(F.col(vec_col), cents))
-    a = as_double(F.col(vec_col))
-    return (
-        assigned.filter(F.col("_centroid").isin([int(p) for p in probe]))
-        .select(id_col, F.round(cosine(a, _lit_vec(qvec)), 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
 
 
 def cosine_dup_pairs(
@@ -687,212 +608,18 @@ def quantize_embeddings_int8(
     )
 
 
-def kmeans_refine_centroids(
-    df: DataFrame,
-    init_centroids: list[list[float]],
-    vec_col: str = "embedding",
-    n_iters: int = 5,
-) -> list[list[float]]:
-    """Lloyd refinement of the IVF coarse centroids, fully distributed:
-    each round is one map-side nearest-centroid assignment (inlined dot
-    products, no shuffle) plus one posexplode+groupBy computing per-centroid
-    per-dimension means (shuffle of C×dim cells). The centroid set is
-    model-sized, so only C×dim floats ever reach the driver per round —
-    the same contract as `choose_centroids`.
-
-    Empty clusters keep their previous centroid (standard Lloyd guard).
-    Deterministic given the deterministic init — no RNG anywhere.
-    """
-    cents = [list(map(float, c)) for c in init_centroids]
-    base = df.select(as_double(F.col(vec_col)).alias("_v"))
-    for _ in range(n_iters):
-        assigned = base.withColumn("_c", ivf_assign(F.col("_v"), cents))
-        means = (
-            assigned.select("_c", F.posexplode("_v").alias("_dim", "_x"))
-            .groupBy("_c", "_dim")
-            .agg(F.avg("_x").alias("_m"))
-            .collect()
-        )
-        new_cents = [list(c) for c in cents]
-        per_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            per_c.setdefault(int(r["_c"]), {})[int(r["_dim"])] = float(r["_m"])
-        for ci, dims in per_c.items():
-            new_cents[ci] = [dims[d] for d in sorted(dims)]
-        if new_cents == cents:
-            break
-        cents = new_cents
-    return cents
-
-
 # ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ): the 100 TB ANN memory tier. Vectors
-# compress to m subspace codes (m bytes at k<=256 codewords vs 4·dim bytes
-# raw — 32x for dim=64/m=8); the scan ranks by an asymmetric-distance table
-# lookup over codes only, and only the short re-rank list touches full
-# vectors. Codebooks are model-sized (m × k × dim/m floats) and train on a
-# deterministic hash-order sample — model fitting on the driver, like the
-# IVF centroids above.
+# IVF and IVF-PQ: the 100 TB ANN tiers. Both fit their models (coarse
+# centroids, per-subspace PQ codebooks) on the exact-integer Lloyd ladder
+# (ml/embeddings.py), so every index decision is pure-integer arithmetic a
+# SQL oracle replays. PQ compresses vectors to m subspace codes (m bytes
+# vs 4·dim raw — 32x for dim=64/m=8); the scan ranks by an
+# asymmetric-distance table lookup over codes only, and only the short
+# re-rank list touches full vectors.
 # ---------------------------------------------------------------------------
 
 
-def l2sq(a, b):
-    """Squared L2 distance between two array<double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def train_pq_codebooks(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 8,
-    k: int = 16,
-    sample: int = 256,
-    n_iters: int = 3,
-) -> list[list[list[float]]]:
-    """Per-subspace codebooks via Lloyd on a deterministic hash-order
-    sample. The sample (`sample` × dim floats) and the result are
-    model-sized; training is driver-side numpy on purpose — fitting a
-    model, not scanning the corpus. Returns m × k × (dim/m)."""
-    import numpy as np
-
-    rows = (
-        df.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample)
-        .select(vec_col)
-        .collect()
-    )
-    X = np.asarray([[float(x) for x in r[0]] for r in rows])
-    # codebooks live on the UNIT SPHERE: vectors are L2-normalized before
-    # encoding (see pq_adc_topk), which makes squared-L2 monotone with
-    # cosine (||a-b||^2 = 2 - 2 cos for unit a, b) — the ADC candidate cut
-    # and the exact cosine re-rank then agree on ordering
-    norms = np.linalg.norm(X, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    X = X / norms
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    books = []
-    for j in range(m):
-        S = X[:, j * dsub : (j + 1) * dsub]
-        # deterministic init: first k DISTINCT sample rows of the subspace
-        # (duplicate seeds would start Lloyd with coincident centroids that
-        # never separate)
-        uniq = S[np.sort(np.unique(S, axis=0, return_index=True)[1])]
-        C = uniq[:k].copy()
-        for _ in range(n_iters):
-            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(len(C)):
-                mask = assign == c
-                if mask.any():
-                    C[c] = S[mask].mean(axis=0)
-        books.append([[float(x) for x in row] for row in C])
-    return books
-
-
-def pq_encode(vec_col, codebooks: list[list[list[float]]]):
-    """m subspace codes as ONE map-side expression (array<int>): for each
-    subspace, the argmin-L2 codeword index over k inlined distances. No
-    shuffle, no UDF — encoding a 100 TB corpus is a single scan."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    raw = as_double(vec_col)
-    nrm = norm(raw)
-    # unit-normalize to match the codebook space (zero vectors pass through)
-    v = F.when(nrm > 0, F.transform(raw, lambda x: x / nrm)).otherwise(raw)
-    codes = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(v, j * dsub + 1, dsub)
-        dists = F.array(*[l2sq(sub, _lit_vec(c)) for c in book])
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    return F.array(*codes)
-
-
-def pq_adc_topk(
-    df: DataFrame,
-    query_vec_df: DataFrame,
-    k: int = 10,
-    m: int = 8,
-    n_codewords: int = 16,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    rerank: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF-PQ ANN top-k: coarse probe (IVF) → asymmetric-distance scan over
-    PQ codes → exact cosine re-rank of the best `rerank` candidates.
-
-    The ADC table (m × k floats: query-subvector distance to every
-    codeword) folds in as literal arrays; the approximate distance per row
-    is m element_at lookups + adds over the CODES column — the full vector
-    is only read for the `rerank` survivors. At 100 TB the codes table is
-    the only thing the scan touches (32× smaller than the raw vectors),
-    partitioned by `_centroid` for probe pruning."""
-    import math
-
-    cents = choose_centroids(df, n_centroids, vec_col, id_col)
-    books = train_pq_codebooks(
-        df, vec_col, id_col, m=m, k=n_codewords
-    )
-    qrow = query_vec_df.select(vec_col).first()
-    qvec = [float(x) for x in qrow[0]]
-    qn = math.sqrt(sum(x * x for x in qvec)) or 1.0
-    qvec_n = [x / qn for x in qvec]
-    dsub = len(qvec) // m
-    # driver-side ADC table: dist(normalized query_sub_j, codeword_jk) —
-    # in the unit-sphere code space this ranking is cosine-consistent
-    table = [
-        [
-            sum(
-                (qvec_n[j * dsub + i] - book[c][i]) ** 2 for i in range(dsub)
-            )
-            for c in range(len(book))
-        ]
-        for j, book in enumerate(books)
-    ]
-
-    def _cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    probe = sorted(range(len(cents)), key=lambda i: -_cos(qvec, cents[i]))[
-        :n_probe
-    ]
-    assigned = df.withColumn("_centroid", ivf_assign(F.col(vec_col), cents))
-    coded = assigned.withColumn("_codes", pq_encode(F.col(vec_col), books))
-    adc = None
-    for j in range(m):
-        term = F.element_at(
-            _lit_vec(table[j]), F.element_at(F.col("_codes"), j + 1) + 1
-        )
-        adc = term if adc is None else adc + term
-    candidates = (
-        coded.filter(F.col("_centroid").isin([int(p) for p in probe]))
-        .withColumn("_adc", adc)
-        .orderBy(F.asc("_adc"), id_col)
-        .limit(rerank)
-    )
-    a = as_double(F.col(vec_col))
-    return (
-        candidates.select(
-            id_col, F.round(cosine(a, _lit_vec(qvec)), 6).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-    )
-
-
-def ivf_topk_exact(
+def ivf_topk(
     df: DataFrame,
     query_vec_df: DataFrame,
     k: int = 10,
@@ -902,9 +629,8 @@ def ivf_topk_exact(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF ANN top-k whose ENTIRE result a SQL oracle can replay — the
-    oracle-checkable twin of :func:`ivf_topk` (whose float Lloyd
-    refinement accumulates per-dim double means in engine-specific order).
+    """IVF ANN top-k: scan only the ``n_probe`` inverted lists nearest to
+    the query. The ENTIRE result is SQL-replayable.
 
     Coarse quantizer: the exact-integer Lloyd tier
     (:func:`~..ml.embeddings.kmeans_lloyd_fit` — md5-order init, scaled-int
@@ -918,10 +644,10 @@ def ivf_topk_exact(
     (bit-identical in DuckDB — the `lsh_ann_topk` precedent), rounded to
     6 dp, ordered (cos desc, id).
 
-    Same 100 TB shape as :func:`ivf_topk`: map-side assignment against
-    centroid literals, probe scan touches ~n_probe/C of the corpus
-    (partition-pruned when the corpus is written partitioned by cluster);
-    only the k×dim integer model reaches the driver.
+    At 100 TB: map-side assignment against centroid literals, the probe
+    scan touches ~n_probe/C of the corpus (partition-pruned when the
+    corpus is written partitioned by `_centroid`; n_probe = C ≡ exact
+    brute force); only the k×dim integer model reaches the driver.
     """
     from ..ml.embeddings import (
         _lloyd_assign_expr,
@@ -934,7 +660,7 @@ def ivf_topk_exact(
     )
     # quantized query vector via the SAME expression the fit used — zero
     # drift between engine and oracle quantization; the raw float form
-    # rides the SAME .first() (one driver job, matching pq_adc_topk_exact)
+    # rides the SAME .first() (one driver job, matching pq_adc_topk)
     qrow = query_vec_df.select(
         quantize_vec_expr(F.col(vec_col)).alias("_qe"),
         as_double(F.col(vec_col)).alias("_qv"),
@@ -959,7 +685,7 @@ def ivf_topk_exact(
     )
 
 
-def pq_codebooks_exact(
+def pq_codebooks(
     base: DataFrame,
     dim: int,
     m: int = 8,
@@ -969,8 +695,7 @@ def pq_codebooks_exact(
     salt: str = "pq",
 ) -> list[list[list[int]]]:
     """Per-subspace PQ codebooks on the exact-integer Lloyd ladder —
-    fully SQL-replayable, unlike :func:`train_pq_codebooks` (whose numpy
-    float means accumulate in engine-specific order).
+    fully SQL-replayable.
 
     ``base`` is the quantized frame ``(id_col, _e array<long>)`` — for
     cosine-consistent codes quantize with ``normalize=True``
@@ -988,7 +713,7 @@ def pq_codebooks_exact(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if k_codes > 16:
-        raise ValueError("pq_codebooks_exact encodes argmin as dist*16+j; k_codes <= 16")
+        raise ValueError("pq_codebooks encodes argmin as dist*16+j; k_codes <= 16")
     dsub = dim // m
     seeds = (
         base.select(
@@ -1058,7 +783,7 @@ def pq_codebooks_exact(
     return books
 
 
-def pq_adc_topk_exact(
+def pq_adc_topk(
     df: DataFrame,
     query_vec_df: DataFrame,
     k: int = 10,
@@ -1082,9 +807,10 @@ def pq_adc_topk_exact(
     driver arithmetic (m×k_codes squared-L2 values injected as literals),
     the candidate cut is an integer `orderBy(_adc, id) LIMIT rerank`, and
     the final scores are the fold-kernel cosine on the RAW float vectors,
-    rounded to 6 dp. Same 100 TB shape as :func:`pq_adc_topk`: encoding
-    is one map-side scan, the candidate scan touches codes only, and only
-    the m·k_codes·(dim/m) integer model reaches the driver."""
+    rounded to 6 dp. At 100 TB, encoding is one map-side scan, the
+    candidate scan touches codes only (partitioned by `_centroid` for
+    probe pruning), and only the m·k_codes·(dim/m) integer model reaches
+    the driver."""
     from ..ml.embeddings import (
         _lloyd_assign_expr,
         kmeans_lloyd_fit,
@@ -1101,7 +827,7 @@ def pq_adc_topk_exact(
         F.col(id_col),
         quantize_vec_expr(F.col(vec_col), normalize=True).alias("_e"),
     )
-    books = pq_codebooks_exact(
+    books = pq_codebooks(
         base, dim, m=m, k_codes=n_codewords, iters=iters, id_col=id_col
     )
     # one driver job for both query forms (quantized ints for probe/ADT,

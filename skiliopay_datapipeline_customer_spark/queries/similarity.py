@@ -148,9 +148,9 @@ def lsh_ann_topk(spark, sf_dir):
 # runs the exact-integer Lloyd coarse quantizer (ml/embeddings.py — the
 # same replayable kernel as kmeans_cluster_profile), integer-L2 probe
 # selection, and the sequential-fold cosine whose bit-parity with DuckDB
-# list_sum the lsh_ann_topk oracle established. The float tier
-# (S.ivf_topk + kmeans_refine_centroids) stays as the library path with
-# its recall tests.
+# list_sum the lsh_ann_topk oracle established. That exact tier is now the
+# only IVF implementation (S.ivf_topk); its recall, coverage and layout
+# tests live in tests/test_similarity_extra.py.
 
 
 def _ivf_ann_topk_oracle(
@@ -191,7 +191,7 @@ def _ivf_ann_topk_oracle(
 def ivf_ann_topk(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0)
-    return S.ivf_topk_exact(
+    return S.ivf_topk(
         emb, qvec, k=10, n_centroids=8, iters=2, n_probe=2
     )
 
@@ -471,8 +471,7 @@ def semantic_dedup_survivors(spark, sf_dir):
 # division are bit-identical across engines — component-exact verified over
 # the whole table), exact-Lloyd coarse quantizer AND per-subspace PQ
 # codebooks, pure-integer ADC candidate cut, fold-kernel cosine re-rank.
-# The numpy tier (S.pq_adc_topk) stays as the library path with its recall
-# and shape tests.
+# That exact tier is now the only IVF-PQ implementation (S.pq_adc_topk).
 
 
 def _norm_quant_sql(scale: int = 10**6, lo: int | None = None, hi: int | None = None) -> str:
@@ -583,7 +582,7 @@ def _ivf_pq_ann_topk_oracle(
 def ivf_pq_ann_topk(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0)
-    return S.pq_adc_topk_exact(emb, qvec, k=10, iters=1)
+    return S.pq_adc_topk(emb, qvec, k=10, iters=1)
 
 
 # Per-dimension distribution stats over the embedding column — the

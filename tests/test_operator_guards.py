@@ -284,6 +284,49 @@ def test_fan_out_auto_mode_skips_non_scan_plans(spark, sf_dir):
     )
 
 
+def test_fan_out_guard_recognises_set_operations(spark, sf_dir):
+    """The guard reads the ANALYZED plan, where SQL DISTINCT, EXCEPT and
+    INTERSECT are still Distinct/Except/Intersect nodes (the optimizer only
+    later rewrites them to Aggregate/Join) — each must be returned
+    untouched like any other shuffle-bearing plan."""
+    from skiliopay_datapipeline_customer_spark.io import fan_out, table
+
+    ids = table(spark, sf_dir, "documents").select("doc_id")
+    ids.createOrReplaceTempView("fan_out_guard_ids")
+    frames = [
+        ids.distinct(),
+        spark.sql("SELECT DISTINCT doc_id FROM fan_out_guard_ids"),
+        ids.exceptAll(ids.limit(1)),
+        ids.subtract(ids.limit(1)),
+        ids.intersect(ids),
+    ]
+    for df in frames:
+        assert fan_out(df) is df
+
+
+def test_fan_out_sizes_remote_uris_by_probe_not_local_path(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A remote URI whose path also exists on the driver's disk must not be
+    sized from the local file: the scheme decides, and a non-local scheme
+    falls through to the partition probe. The local twin here is a large
+    sparse file, so sizing it would wrongly call the one-task scan wide
+    enough and skip the repartition."""
+    from skiliopay_datapipeline_customer_spark.io import fan_out, table
+
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    assert docs.rdd.getNumPartitions() < target
+    big = tmp_path / "part-0.parquet"
+    with open(big, "wb") as fh:
+        fh.truncate(target * (4 << 20) * 4)
+    monkeypatch.setattr(docs, "inputFiles", lambda: [f"hdfs://nn{big}"])
+    out = fan_out(docs)
+    assert out is not docs
+    assert out.rdd.getNumPartitions() >= target
+
+
 def test_order_trend_pandas_constant_date_yields_null(spark, tmp_path):
     """A customer whose n>=3 orders all share one date has var(x)==0: the
     slope is NULL (regr_slope semantics), not 0.0 — the driver corpora never

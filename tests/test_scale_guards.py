@@ -558,6 +558,35 @@ def test_rolling_dau_sketch_tier_tracks_exact(spark, sf_dir):
         assert abs(approx[d] - n) <= max(3, 0.15 * n), (d, approx[d], n)
 
 
+def test_no_dict_literal_repeats_a_constant_key():
+    """A dict literal with a repeated constant key silently keeps only the
+    last value — the earlier entry is dead text that reads as live (the
+    _FORCE ledger once carried 40 such shadowed stamps). Every module in
+    the package is parsed and checked; no linter is needed."""
+    import ast
+    import pathlib
+
+    import skiliopay_datapipeline_customer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    repeats = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Dict):
+                continue
+            seen = set()
+            for key in node.keys:
+                if not isinstance(key, ast.Constant):
+                    continue
+                if key.value in seen:
+                    repeats.append(
+                        f"{path.relative_to(root)}:{key.lineno}: {key.value!r}"
+                    )
+                seen.add(key.value)
+    assert not repeats, repeats
+
+
 def test_registry_rotation_invariants():
     """The rotation policy only works if its inputs stay coherent: every
     _PRIORITY/_FORCE name must be a registered query (a stale name would
@@ -1091,6 +1120,28 @@ def test_rank_family_on_empty_and_tiny_frames(spark):
         ).collect()
     }
     assert cs == {1: 5.0, 2: 8.0, 3: 17.0}
+
+
+def test_rank_keeps_caller_columns_named_like_temp_keys(spark):
+    """The SQL fast path projects the order keys under temp names and
+    drops them afterwards; a caller column that already carries such a
+    name must come through untouched, not be replaced and dropped."""
+    df = spark.createDataFrame(
+        [(i, float(i % 7), f"keep-{i}", -i) for i in range(40)],
+        "id long, v double, __rk0 string, __rk1 long",
+    )
+    out = global_rank_distributed(
+        df, [("v", "desc"), "id"], rank_col="r", num_partitions=4
+    )
+    assert out.columns[:4] == ["id", "v", "__rk0", "__rk1"]
+    rows = out.collect()
+    assert {(r["id"], r["__rk0"], r["__rk1"]) for r in rows} == {
+        (i, f"keep-{i}", -i) for i in range(40)
+    }
+    order = sorted(range(40), key=lambda i: (-float(i % 7), i))
+    assert {r["id"]: r["r"] for r in rows} == {
+        i: pos + 1 for pos, i in enumerate(order)
+    }
 
 
 def test_boundary_cache_clear_and_eviction_are_correctness_neutral(spark):

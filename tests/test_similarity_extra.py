@@ -5,28 +5,34 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from skiliopay_datapipeline_customer_spark.io import table
+from skiliopay_datapipeline_customer_spark.ml.embeddings import (
+    _lloyd_assign_expr,
+    kmeans_lloyd_fit,
+    quantize_vec_expr,
+)
 from skiliopay_datapipeline_customer_spark.operators import similarity as S
+
+
+def _ivf_assigned(emb, n_centroids: int = 4):
+    """The corpus with the IVF coarse-quantizer `_centroid` attached — the
+    same exact-integer Lloyd model and assignment expression S.ivf_topk
+    probes against."""
+    _, cents = kmeans_lloyd_fit(emb, k=n_centroids, iters=2)
+    assigned = emb.withColumn(
+        "_e", quantize_vec_expr(F.col("embedding"))
+    ).withColumn("_centroid", _lloyd_assign_expr(cents))
+    return assigned.drop("_e"), cents
 
 
 def test_ivf_assignment_covers_all(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
-    cents = S.choose_centroids(emb, n_centroids=4)
+    assigned, cents = _ivf_assigned(emb)
     assert len(cents) == 4 and len(cents[0]) == 64
-    assigned = emb.withColumn("_c", S.ivf_assign(F.col("embedding"), cents))
-    row = assigned.agg(F.min("_c"), F.max("_c"), F.count("*")).first()
-    assert 0 <= row[0] and row[1] <= 3 and row[2] == emb.count()
-
-
-def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0)
-    exact = {r["vec_id"] for r in S.brute_force_topk(emb, q, k=5).collect()}
-    # probing ALL lists ≡ exact search
-    full = S.ivf_topk(emb, q, k=5, n_centroids=4, n_probe=4)
-    assert {r["vec_id"] for r in full.collect()} == exact
-    # single-probe result is a subset of the corpus with query in its own list
-    one = S.ivf_topk(emb, q, k=5, n_centroids=4, n_probe=1).collect()
-    assert 0 in {r["vec_id"] for r in one}  # self-similarity 1.0 survives
+    row = assigned.agg(
+        F.min("_centroid"), F.max("_centroid"), F.count("_centroid"), F.count("*")
+    ).first()
+    # every row gets a (non-null) inverted-list id in [0, C)
+    assert 0 <= row[0] and row[1] <= 3 and row[2] == row[3] == emb.count()
 
 
 def test_cosine_dup_pairs_symmetric_free(spark, sf_dir):
@@ -43,8 +49,7 @@ def test_ivf_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     probe of n_probe lists is a partition-pruned scan (only the probed
     centroid directories are read)."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = S.choose_centroids(emb, n_centroids=4)
-    assigned = emb.withColumn("_centroid", S.ivf_assign(F.col("embedding"), cents))
+    assigned, _ = _ivf_assigned(emb)
     path = str(tmp_path / "ivf_corpus")
     assigned.write.partitionBy("_centroid").mode("overwrite").parquet(path)
 
@@ -76,37 +81,27 @@ def test_multiprobe_recall_at_least_single_probe(spark, sf_dir):
     assert 0 in multi  # the query vector itself always survives
 
 
-def test_kmeans_refinement_improves_assignment_quality(spark, sf_dir):
-    """Lloyd rounds must not make the coarse quantizer worse: the mean
-    cosine of each vector to its assigned centroid is at least as good as
-    under the unrefined hash-sampled init, and assignments still cover all
-    vectors."""
-    emb = table(spark, sf_dir, "embeddings")
-    init = S.choose_centroids(emb, n_centroids=4)
-    refined = S.kmeans_refine_centroids(emb, init, n_iters=3)
-    assert len(refined) == 4 and len(refined[0]) == 64
-
-    def mean_assigned_cos(cents):
-        v = S.as_double(F.col("embedding"))
-        best = F.greatest(*[S.cosine(v, S._lit_vec(c)) for c in cents])
-        return emb.agg(F.avg(best)).first()[0]
-
-    assert mean_assigned_cos(refined) >= mean_assigned_cos(init) - 1e-9
-    assigned = emb.withColumn("_c", S.ivf_assign(F.col("embedding"), refined))
-    assert assigned.filter(F.col("_c").isNull()).count() == 0
-
-
 def test_pq_encode_shapes_and_determinism(spark, sf_dir):
-    from skiliopay_datapipeline_customer_spark.io import table
-    from skiliopay_datapipeline_customer_spark.operators import similarity as S
-    from pyspark.sql import functions as F
-
+    """PQ codebooks are m × k_codes × dim/m integer centroids, identical
+    across fits (md5-order seeds, exact-integer Lloyd), and every vector
+    encodes to m codes in [0, k_codes) deterministically."""
     emb = table(spark, sf_dir, "embeddings")
-    books = S.train_pq_codebooks(emb, m=8, k=16)
-    assert len(books) == 8 and all(len(b) <= 16 for b in books)
-    dsub = len(books[0][0])
-    assert dsub * 8 == 64
-    coded = emb.select("vec_id", S.pq_encode(F.col("embedding"), books).alias("c"))
+    base = emb.select(
+        "vec_id", quantize_vec_expr(F.col("embedding"), normalize=True).alias("_e")
+    )
+    books = S.pq_codebooks(base, 64, m=8, k_codes=16, iters=1)
+    assert len(books) == 8
+    assert all(len(b) == 16 and all(len(c) == 8 for c in b) for b in books)
+    assert books == S.pq_codebooks(base, 64, m=8, k_codes=16, iters=1)
+    coded = base.select(
+        "vec_id",
+        F.array(
+            *[
+                _lloyd_assign_expr(books[s], arr=F.slice("_e", s * 8 + 1, 8))
+                for s in range(8)
+            ]
+        ).alias("c"),
+    )
     rows = {r.vec_id: list(r.c) for r in coded.collect()}
     rows2 = {r.vec_id: list(r.c) for r in coded.collect()}
     assert rows == rows2  # deterministic encoding
@@ -117,9 +112,9 @@ def test_ivf_pq_recall_on_planted_clusters(spark):
     """Recall on PLANTED cluster structure — the workload ANN exists for
     (isotropic random vectors are the information-theoretic worst case:
     all pairs sit at cosine ~0.4 and any quantizer reorders them). The
-    cosine-consistent ADC (unit-sphere codebooks) must recover true
-    neighbors both at the registered query's DEFAULT parameters and with
-    the probe loss eliminated (full probe isolates PQ quantization loss)."""
+    cosine-consistent ADC (unit-sphere integer codebooks) must recover true
+    neighbors both at the operator's DEFAULT parameters and with the probe
+    loss eliminated (full probe isolates PQ quantization loss)."""
     import numpy as np
 
     from skiliopay_datapipeline_customer_spark.operators import similarity as S
@@ -265,7 +260,7 @@ def test_ivf_topk_exact_full_probe_equals_brute_force(spark, sf_dir):
     q = emb.filter(F.col("vec_id") == 0)
     full = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.ivf_topk_exact(
+        for r in S.ivf_topk(
             emb, q, k=5, n_centroids=4, iters=2, n_probe=4
         ).collect()
     ]
@@ -276,7 +271,7 @@ def test_ivf_topk_exact_full_probe_equals_brute_force(spark, sf_dir):
     assert full == brute
     one = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.ivf_topk_exact(
+        for r in S.ivf_topk(
             emb, q, k=5, n_centroids=4, iters=2, n_probe=1
         ).collect()
     ]
@@ -284,9 +279,12 @@ def test_ivf_topk_exact_full_probe_equals_brute_force(spark, sf_dir):
         (r["vec_id"], r["cos_sim"])
         for r in S.brute_force_topk(emb, q, k=500).collect()
     )
+    # the query's own inverted list is always the first one probed, so its
+    # self-similarity 1.0 survives even a single probe
+    assert one[0] == (0, 1.0)
     again = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.ivf_topk_exact(
+        for r in S.ivf_topk(
             emb, q, k=5, n_centroids=4, iters=2, n_probe=1
         ).collect()
     ]
@@ -305,11 +303,11 @@ def test_pq_adc_topk_exact_deterministic_and_sane(spark, sf_dir):
     q = emb.filter(F.col("vec_id") == 0)
     run1 = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.pq_adc_topk_exact(emb, q, k=10, iters=1).collect()
+        for r in S.pq_adc_topk(emb, q, k=10, iters=1).collect()
     ]
     run2 = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.pq_adc_topk_exact(emb, q, k=10, iters=1).collect()
+        for r in S.pq_adc_topk(emb, q, k=10, iters=1).collect()
     ]
     assert run1 == run2 and len(run1) == 10
     brute = {
@@ -319,7 +317,7 @@ def test_pq_adc_topk_exact_deterministic_and_sane(spark, sf_dir):
     assert set(run1) <= brute
     full = [
         (r["vec_id"], r["cos_sim"])
-        for r in S.pq_adc_topk_exact(
+        for r in S.pq_adc_topk(
             emb, q, k=5, n_centroids=4, iters=1, n_probe=4, rerank=500
         ).collect()
     ]
