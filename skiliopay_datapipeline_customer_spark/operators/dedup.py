@@ -13,8 +13,15 @@ Beyond the reference's U1 drop_duplicates (src/processing/etl_pipeline.py:
 - SimHash:      64-bit fingerprint; near-dups differ in few bits. Map-only
                 fingerprint + groupBy on rotated prefixes for banding.
 
-Everything is native Column expressions (xxhash64, transform, aggregate) —
-no Python UDFs, whole-stage codegen end to end.
+MinHash and SimHash each have ONE body over a named hash ``kernel``
+(:data:`_KERNELS`): ``"xxhash64"`` — one string hash per gram plus
+fixed-width long mixes, the fast default — or ``"md5"`` — a 60-bit md5
+prefix that every SQL engine computes identically (DuckDB:
+``CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)``), so its signatures and
+buckets replay bit-for-bit in an oracle.
+
+Everything is native Column expressions (xxhash64, md5, transform,
+aggregate) — no Python UDFs, whole-stage codegen end to end.
 """
 
 from __future__ import annotations
@@ -53,19 +60,11 @@ def tokens(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
-def distinct_tokens(col):
-    return F.array_distinct(tokens(col))
-
-
-def content_hash(col):
-    """Deterministic exact-dup key (md5 — portable to the DuckDB oracle)."""
-    return F.md5(col)
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per exact content hash. One shuffle on the hash."""
+    """Keep the min-id row per exact content hash. One shuffle on the hash
+    (md5 — portable to the DuckDB oracle)."""
     return (
-        df.withColumn("_h", content_hash(F.col(text_col)))
+        df.withColumn("_h", F.md5(F.col(text_col)))
         .groupBy("_h")
         .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count"))
         .drop("_h")
@@ -97,12 +96,71 @@ def shingles_from_tokens(toks_col, n: int):
     )
 
 
-def word_shingles(col, n: int = 3):
-    """n-gram word shingles as an array column. Prefer projecting
-    :func:`tokens` first and calling :func:`shingles_from_tokens` on the
-    attribute — this convenience form re-evaluates the split per reference
-    (see shingles_from_tokens)."""
-    return shingles_from_tokens(tokens(col), n)
+# Hash kernels of the minhash/simhash family, as SQL-text templates: each
+# builder parses its whole hash expression JVM-side in one py4j round trip
+# (the Column form cost ~10 round trips per hash at construction time).
+# Placeholders: {g} the gram string, {h} the base hash (the gram itself
+# when ``base`` is None), {j} the family member, {cols} a band's signature
+# columns, {b} the band id.
+#   base           gram → base hash, mixed once per member
+#   member         base, j → j-th minhash family member
+#   bucket         band's signature longs, b → LSH bucket
+#   simhash_input  gram → the hash whose bits simhash votes on
+#   distinct_grams hash each doc's DISTINCT gram set (the md5 oracles'
+#                  semantics) rather than every occurrence — min() is
+#                  the same either way, simhash vote sums are not
+#   simhash_bits   fingerprint width (the sign bit stays unused)
+_MD5_60 = "CAST(conv(substring(md5({}), 1, 15), 16, 10) AS BIGINT)"
+_KERNELS = {
+    # one string hash per gram, then fixed-width hashLong/hashInt mixes —
+    # no k string re-hashes; replayable for grams under 32 bytes (the
+    # oracles' XXH64 short-string tail cascade)
+    "xxhash64": {
+        "base": "xxhash64({g})",
+        "member": "xxhash64({h}, {j})",
+        "bucket": "xxhash64({cols})",
+        "simhash_input": "xxhash64({g})",
+        "distinct_grams": False,
+        "simhash_bits": 63,
+    },
+    # first 15 hex chars of md5 — bit-identical in every SQL engine
+    "md5": {
+        "base": None,
+        "member": _MD5_60.format("concat({h}, '#{j}')"),
+        "bucket": _MD5_60.format("concat_ws(':', {cols}, '{b}')"),
+        "simhash_input": _MD5_60.format("concat({g}, '#0')"),
+        "distinct_grams": True,
+        "simhash_bits": 32,
+    },
+}
+
+
+def _kernel(name: str) -> dict:
+    if name not in _KERNELS:
+        raise ValueError(
+            f"unknown hash kernel {name!r}: expected one of "
+            f"{', '.join(_KERNELS)}"
+        )
+    return _KERNELS[name]
+
+
+def _gram_rows(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, distinct: bool
+) -> DataFrame:
+    """(id, g) rows — one per word n-gram occurrence of each doc, or one per
+    distinct gram. ``shingle_n == 1`` splits inline: a single reference to
+    the token array needs no ``_toks`` projection (one Project fewer)."""
+    # fan_out: the gram+hash kernel downstream is the expensive stage; a
+    # one-row-group scan would otherwise run it on a single core
+    rows = fan_out(df.select(F.col(id_col), F.col(text_col)))
+    if shingle_n == 1:
+        grams = tokens(F.col(text_col))
+    else:
+        rows = rows.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        grams = shingles_from_tokens(F.col("_toks"), shingle_n)
+    if distinct:
+        grams = F.array_distinct(grams)
+    return rows.select(F.col(id_col), F.explode(grams).alias("g"))
 
 
 def minhash_signatures(
@@ -111,6 +169,7 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 32,
     shingle_n: int = 3,
+    kernel: str = "xxhash64",
 ) -> DataFrame:
     """One row per doc with columns mh_0..mh_{k-1}.
 
@@ -120,24 +179,20 @@ def minhash_signatures(
     doc length. (A per-row nested array expression recomputes the shingle
     array k times and melts codegen — measured 60× slower.)
     """
-    # fan_out: the shingle+hash kernel below is the expensive stage; a
-    # one-row-group scan would otherwise run it on a single core
-    shingled = fan_out(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.explode(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("sh"),
-    )
-    # hash the shingle STRING once, derive the k family members by mixing
-    # the resulting long with the seed — hashing (long, int) is a fixed-width
-    # JVM op vs re-hashing a ~20-char string k times
-    base = shingled.select(F.col(id_col), F.xxhash64("sh").alias("_h0"))
-    # SQL-text aggregates: {j} parses to the same IntegerType literal as
-    # F.lit(j), so the seed-mix hash is bit-identical (r13 — py4j
-    # construction cost, see _portable_hash64_sql)
-    return base.groupBy(id_col).agg(
+    k = _kernel(kernel)
+    rows = _gram_rows(df, text_col, id_col, shingle_n, k["distinct_grams"])
+    h = "g"
+    if k["base"]:
+        # hash the shingle STRING once, derive the k family members by
+        # mixing the resulting long with the seed — hashing (long, int) is
+        # a fixed-width JVM op vs re-hashing a ~20-char string k times
+        h = "_h"
+        rows = rows.select(
+            F.col(id_col), F.expr(k["base"].format(g="g")).alias(h)
+        )
+    return rows.groupBy(id_col).agg(
         *[
-            F.expr(f"min(xxhash64(_h0, {j}))").alias(f"mh_{j}")
+            F.expr(f"min({k['member'].format(h=h, j=j)})").alias(f"mh_{j}")
             for j in range(num_hashes)
         ]
     )
@@ -150,6 +205,7 @@ def minhash_band_buckets(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
+    kernel: str = "xxhash64",
 ) -> DataFrame:
     """(id, band, bucket) LSH banding rows — the joinable/persistable form of
     a document's minhash signature. Feeds the full-corpus self-join
@@ -163,29 +219,25 @@ def minhash_band_buckets(
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
         )
+    bucket = _kernel(kernel)["bucket"]
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, kernel)
+    # posexplode over the per-band bucket array: pos IS the band id
+    bucket_sqls = [
+        bucket.format(
+            cols=", ".join(
+                f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)
+            ),
+            b=b,
+        )
+        for b in range(bands)
+    ]
     return sig.select(
         id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        # multi-arg xxhash64 hashes the raw longs — no
-                        # string casts/concat in the generated code
-                        F.xxhash64(
-                            *[
-                                F.col(f"mh_{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        F.expr(f"posexplode(array({', '.join(bucket_sqls)}))").alias(
+            "band", "bucket"
+        ),
+    )
 
 
 def minhash_lsh_candidates(
@@ -196,6 +248,7 @@ def minhash_lsh_candidates(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int = 1000,
+    kernel: str = "xxhash64",
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding. Returns (id_a, id_b, n_bands).
 
@@ -208,7 +261,9 @@ def minhash_lsh_candidates(
     belong in the EXACT-dedup tier (identical content collides in every
     band), which runs first in the ladder.
     """
-    banded = minhash_band_buckets(df, text_col, id_col, num_hashes, bands, shingle_n)
+    banded = minhash_band_buckets(
+        df, text_col, id_col, num_hashes, bands, shingle_n, kernel
+    )
     raw, capped = capped_bucket_pairs(banded, id_col, max_bucket_size)
     pairs = raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
     return materialize(pairs, capped)
@@ -265,12 +320,14 @@ def incremental_lsh_candidates(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int = 1000,
+    kernel: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """Ingestion-time dedup: candidate pairs for a NEW batch of documents
     against a persistent signature ``store`` — (id, band, bucket) rows from
-    every prior batch (:func:`minhash_band_buckets`, written partitioned by
-    band) — plus within-batch pairs. Returns ``(pairs, store_additions)``:
-    append ``store_additions`` to the store after the batch commits.
+    every prior batch (:func:`minhash_band_buckets` with the same hash
+    counts and ``kernel``, written partitioned by band) — plus within-batch
+    pairs. Returns ``(pairs, store_additions)``: append ``store_additions``
+    to the store after the batch commits.
 
     Equivalence contract (tested): the pair set equals a FULL-corpus
     :func:`minhash_lsh_candidates` run restricted to pairs touching a new
@@ -284,22 +341,9 @@ def incremental_lsh_candidates(
     unbounded by watermark (unlike ``dropDuplicatesWithinWatermark``,
     which forgets keys past the horizon).
     """
-    nb = minhash_band_buckets(new_docs, text_col, id_col, num_hashes, bands, shingle_n)
-    return incremental_bucket_candidates(nb, store, id_col, max_bucket_size)
-
-
-def incremental_bucket_candidates(
-    new_buckets: DataFrame,
-    store: DataFrame,
-    id_col: str = "doc_id",
-    max_bucket_size: int = 1000,
-) -> tuple[DataFrame, DataFrame]:
-    """Hash-agnostic core of :func:`incremental_lsh_candidates`: candidate
-    pairs for a NEW batch's (id, band, bucket) rows against the persistent
-    store. Split out so the portable-md5 banding tier
-    (:func:`minhash_band_buckets_md5` — oracle-checkable) and the xxhash64
-    production tier share one combinator."""
-    nb = new_buckets.persist()
+    nb = minhash_band_buckets(
+        new_docs, text_col, id_col, num_hashes, bands, shingle_n, kernel
+    ).persist()
     combined = nb.union(store.select(id_col, "band", "bucket"))
     # bucket caps must count ALL members (store + batch) or the capped set
     # would diverge from the full-corpus run's
@@ -456,199 +500,31 @@ def simhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 2,
+    kernel: str = "xxhash64",
 ) -> DataFrame:
-    """63-bit SimHash fingerprint per doc (sign bit unused → positive long).
+    """SimHash fingerprint per doc, the kernel's ``simhash_bits`` wide (63
+    for xxhash64, 32 for md5; the sign bit stays unused → positive long).
 
-    For each bit position, sum +1/-1 over shingle hashes by that bit; the
-    sign of the sum is the fingerprint bit. Same explode-once shape as
-    minhash: one shuffle of 63 small ints per doc, map-side combined.
+    For each bit position, sum +1/-1 over gram hashes by that bit; the sign
+    of the sum is the fingerprint bit. Same explode-once shape as minhash:
+    one shuffle of ``simhash_bits`` small ints per doc, map-side combined.
+    ``shingle_n > 1`` fingerprints n-gram shingles instead of tokens — on a
+    corpus whose docs all draw from a tiny vocabulary (the synthetic
+    documents use ~31 words), token sets are nearly identical across docs
+    and near-pair output degenerates to ~all-pairs; shingles stay diverse.
     """
-    hashed = (
-        fan_out(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(
-            F.col(id_col),
-            F.explode(shingles_from_tokens(F.col("_toks"), shingle_n)).alias("sh"),
-        )
-        .select(F.col(id_col), F.xxhash64("sh").alias("h"))
+    k = _kernel(kernel)
+    bits = k["simhash_bits"]
+    rows = _gram_rows(df, text_col, id_col, shingle_n, k["distinct_grams"])
+    hashed = rows.select(
+        F.col(id_col), F.expr(k["simhash_input"].format(g="g")).alias("_h")
     )
-    # SQL-text aggregates, same trees (see simhash_signatures_md5 — r13)
+    # the per-bit sums and the fingerprint reassembly are SQL text: one JVM
+    # parse each, exact integer arithmetic
     agg = hashed.groupBy(id_col).agg(
         *[
             F.expr(
-                f"sum(CASE WHEN (h & CAST({1 << i} AS BIGINT)) != 0 "
-                "THEN 1 ELSE -1 END)"
-            ).alias(f"b{i}")
-            for i in range(63)
-        ]
-    )
-    fp_sql = "CAST(0 AS BIGINT) + " + " + ".join(
-        f"CAST(b{i} > 0 AS BIGINT) * CAST({1 << i} AS BIGINT)"
-        for i in range(63)
-    )
-    return agg.select(F.col(id_col), F.expr(fp_sql).alias("simhash"))
-
-
-def portable_hash64(col, seed: int):
-    """Engine-portable 60-bit hash: first 15 hex chars of md5(tok + '#' + seed).
-
-    xxhash64 is Spark-only; md5 exists in every engine (DuckDB:
-    CAST('0x'||substr(md5(x),1,15) AS BIGINT) is bit-identical), which makes
-    minhash/simhash signatures ORACLE-CHECKABLE. ~3× slower than xxhash64 —
-    the xxhash64 variants above remain the production tier; these portable
-    twins are the verification tier.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 15), 16, 10
-    ).cast("long")
-
-
-def _portable_hash64_sql(col_sql: str, seed: int) -> str:
-    """SQL text of :func:`portable_hash64` — the identical Catalyst tree
-    parsed JVM-side in one py4j round trip (r13: the signature builders
-    below construct 8-32 of these per call; the Column form's py4j
-    round trips were the dominant per-query cost at sf0.1 — see
-    similarity._bucket_fold_sql for the measurement)."""
-    return (
-        f"CAST(conv(substring(md5(concat({col_sql}, '#{seed}')), 1, 15), "
-        "16, 10) AS BIGINT)"
-    )
-
-
-def minhash_signatures_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """Token/shingle-set minhash with portable hashes (verification twin of
-    minhash_signatures; both gram units stay SQL-expressible — DuckDB builds
-    the same shingles via list_transform)."""
-    if shingle_n == 1:
-        toks = fan_out(df.select(F.col(id_col), F.col(text_col))).select(
-            F.col(id_col), F.explode(distinct_tokens(F.col(text_col))).alias("tok")
-        )
-    else:
-        toks = (
-            fan_out(df.select(F.col(id_col), F.col(text_col)))
-            .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-            .select(
-                F.col(id_col),
-                F.explode(
-                    F.array_distinct(
-                        shingles_from_tokens(F.col("_toks"), shingle_n)
-                    )
-                ).alias("tok"),
-            )
-        )
-    # each min(portable-hash) agg is built as SQL text: the identical
-    # tree, one JVM parse per hash instead of ~10 py4j round trips each
-    # (plan-construction cost, not execution — see _portable_hash64_sql)
-    return toks.groupBy(id_col).agg(
-        *[
-            F.expr(f"min({_portable_hash64_sql('tok', j)})").alias(f"mh_{j}")
-            for j in range(num_hashes)
-        ]
-    )
-
-
-def minhash_band_buckets_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, band, bucket) banding rows from PORTABLE md5 minhashes — the
-    oracle-checkable twin of :func:`minhash_band_buckets` (DuckDB derives
-    bit-identical buckets from the same md5 kernel). Bucket = portable hash
-    of the band's signature slice serialized as ':'-joined decimal longs
-    with the band id as the seed suffix."""
-    if num_hashes % bands:
-        # same contract as the xxhash64 tier: a remainder would silently
-        # drop the trailing hashes from every bucket
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures_md5(df, text_col, id_col, num_hashes, shingle_n)
-    # posexplode over the per-band bucket array: pos IS the band id (same
-    # rows as the r6-r12 struct-array explode), and the whole banding
-    # expression parses JVM-side in one round trip (r13 — the Column form
-    # cost ~15 py4j round trips per band at query-construction time)
-    bucket_sqls = [
-        "CAST(conv(substring(md5(concat_ws(':', "
-        + ", ".join(
-            [f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
-            + [f"'{b}'"]
-        )
-        + ")), 1, 15), 16, 10) AS BIGINT)"
-        for b in range(bands)
-    ]
-    return sig.select(
-        id_col,
-        F.expr(f"posexplode(array({', '.join(bucket_sqls)}))").alias(
-            "band", "bucket"
-        ),
-    )
-
-
-def minhash_lsh_candidates_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Full-corpus LSH candidate pairs from the PORTABLE md5 banding tier —
-    same plan shape as :func:`minhash_lsh_candidates` (banding → capped
-    bucket self-join → per-pair band count), same md5 kernel as the
-    incremental tier, so the whole pipeline is oracle-checkable in DuckDB.
-    Returns (id_a, id_b, n_bands)."""
-    banded = minhash_band_buckets_md5(
-        df, text_col, id_col, num_hashes, bands, shingle_n
-    )
-    raw, capped = capped_bucket_pairs(banded, id_col, max_bucket_size)
-    pairs = raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
-    return materialize(pairs, capped)
-
-
-def simhash_signatures_md5(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """Token/shingle-set simhash with portable hashes (verification twin of
-    simhash_signatures). ``shingle_n > 1`` fingerprints the n-gram shingle
-    set instead of the token set — on a corpus whose docs all draw from a
-    tiny vocabulary (the synthetic documents use ~31 words), token sets are
-    nearly identical across docs and the near-pair output degenerates to
-    ~all-pairs; shingle sets stay diverse."""
-    grams = (
-        F.array_distinct(F.col("_toks"))
-        if shingle_n == 1
-        else F.array_distinct(shingles_from_tokens(F.col("_toks"), shingle_n))
-    )
-    hashed = (
-        fan_out(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(F.col(id_col), F.explode(grams).alias("tok"))
-        .select(F.col(id_col), portable_hash64(F.col("tok"), 0).alias("hv"))
-    )
-    # the per-bit sums and the fingerprint reassembly are built as SQL
-    # text (identical trees, exact integer arithmetic; r13 — the Column
-    # form issued ~10 py4j round trips per bit at construction time,
-    # ~0.4 s of the query's sf0.1 wall for bits=32)
-    agg = hashed.groupBy(id_col).agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftright(hv, {i}) & 1) = 1 "
+                f"sum(CASE WHEN (shiftright(_h, {i}) & 1) = 1 "
                 "THEN 1 ELSE -1 END)"
             ).alias(f"b{i}")
             for i in range(bits)

@@ -61,15 +61,12 @@ def ngram_jaccard_dups(spark, sf_dir):
     ).orderBy("id_a", "id_b")
 
 
-# MinHash+LSH candidate pairs. The declared query runs the PORTABLE md5
-# banding tier (r07 oracle upgrade: same banding → capped bucket self-join →
-# per-pair band count plan as the xxhash64 tier, but every hash is
-# reproducible in DuckDB, so the full candidate derivation is hash-checked).
-# The xxhash64 production tier (operators/dedup.py::minhash_lsh_candidates,
-# one string hash + fixed-width long mixes instead of k md5s) keeps its
-# pytest coverage and stays the recommended 100 TB entry point; the two
-# tiers share capped_bucket_pairs, so the oracle exercises the shared
-# self-join combinator end to end.
+# MinHash+LSH candidate pairs: banding → capped bucket self-join → per-pair
+# band count (operators/dedup.py::minhash_lsh_candidates). The minhash
+# queries below pick a hash kernel per oracle: xxhash64 (the default — one
+# string hash + fixed-width long mixes per shingle instead of k md5s) where
+# the XXH64 replay applies, md5 where the oracle reproduces the 60-bit md5
+# prefix directly.
 
 _LSH_HASHES, _LSH_MH_BANDS = 8, 4
 
@@ -77,8 +74,8 @@ _LSH_HASHES, _LSH_MH_BANDS = 8, 4
 def _md5_banding_ctes(num_hashes: int, bands: int) -> str:
     """Shared oracle prefix: 3-gram shingles → md5 minhash signatures →
     (doc_id, band, bucket) rows → bucket-size cap table (`ok`). Mirrors
-    operators/dedup.py::minhash_band_buckets_md5 + the capped_bucket_pairs
-    size window, term for term."""
+    operators/dedup.py::minhash_band_buckets(kernel="md5") + the
+    capped_bucket_pairs size window, term for term."""
     rows = num_hashes // bands
     mins = ",\n             ".join(
         f"min(CAST('0x' || substr(md5(sh || '#{j}'), 1, 15) AS BIGINT)) AS mh_{j}"
@@ -114,18 +111,14 @@ def _md5_banding_ctes(num_hashes: int, bands: int) -> str:
     ok AS (SELECT band, bucket FROM sizes WHERE c <= 1000)"""
 
 
-# r12: the declared query moved BACK to the xxhash64 PRODUCTION tier —
-# with a full oracle this time. The r7 md5 tier existed because string
-# xxhash64 looked SQL-irreproducible; the short-string tail cascade
-# (fixtures_oracle.xxhash64_ascii_short_sql — 3-gram shingles max 26
-# bytes, probed sf0.001–sf1) replays F.xxhash64(sh), and the k seed
-# mixes xxhash64(_h0, lit(j)) plus the per-band bucket hashes over the
-# signature longs are the same fixed-width hashLong/hashInt chains the
-# churn fixture oracle already replays. So the 100 TB entry point (one
-# string hash + JVM long mixes per shingle instead of k md5 concats) now
-# sits under the full hash gate itself; the md5 tier stays as the
-# incremental-store kernel (incremental_dedup_candidates) and the
-# calibration view's signature source.
+# minhash_lsh_candidates runs the xxhash64 kernel under a full oracle: the
+# XXH64 short-string tail cascade (fixtures_oracle.xxhash64_ascii_short_sql)
+# replays xxhash64(g) for inputs under 32 bytes — 3-gram shingles max 26
+# bytes, probed sf0.001–sf1 — and any >=32-byte/non-ASCII shingle raises
+# error() in the oracle instead of hashing wrong. The k seed mixes
+# xxhash64(_h, j) and the per-band bucket hashes over the signature longs
+# are the same fixed-width hashLong/hashInt chains the churn fixture oracle
+# already replays.
 
 
 def _minhash_xxh_oracle(num_hashes: int, bands: int) -> str:
@@ -259,11 +252,12 @@ def _minhash_jaccard_oracle() -> str:
 @query("minhash_jaccard_estimates", oracle=_minhash_jaccard_oracle())
 def minhash_jaccard_estimates(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    cand = D.minhash_lsh_candidates_md5(
-        docs, num_hashes=_LSH_HASHES, bands=_LSH_MH_BANDS
+    cand = D.minhash_lsh_candidates(
+        docs, num_hashes=_LSH_HASHES, bands=_LSH_MH_BANDS, shingle_n=3,
+        kernel="md5",
     )
-    sig = D.minhash_signatures_md5(
-        docs, num_hashes=_LSH_HASHES, shingle_n=3
+    sig = D.minhash_signatures(
+        docs, num_hashes=_LSH_HASHES, shingle_n=3, kernel="md5"
     )
     sets = docs.select(
         "doc_id", D.tokens(F.col("text")).alias("_toks")
@@ -376,11 +370,10 @@ def ngram_novelty_scores(spark, sf_dir):
     )
 
 
-# SimHash 64-bit fingerprints over the PRODUCTION xxhash64 hash — full
-# oracle check since r12. The r7 note called xxhash64-over-strings
-# SQL-irreproducible because of XXH64's 32-byte stripe loop; but inputs
-# under 32 bytes never enter that loop — they take the fixed tail cascade
-# (≤3 word rounds + optional 4-byte round + ≤3 byte rounds + fmix), which
+# SimHash 63-bit fingerprints on the xxhash64 kernel, full oracle check.
+# XXH64 over strings is SQL-reproducible only below its 32-byte stripe
+# loop: shorter inputs take the fixed tail cascade (≤3 word rounds +
+# optional 4-byte round + ≤3 byte rounds + fmix), which
 # fixtures_oracle.xxhash64_ascii_short_sql replays with the same mod-2^64
 # limb arithmetic that already replays the fixed-width churn hashes. The
 # 2-gram shingle vocabulary maxes at 17 bytes across sf0.001–sf1 (probed),
@@ -434,10 +427,9 @@ def simhash_fingerprints(spark, sf_dir):
     return D.simhash_signatures(table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-# Portable-hash verification twins: md5-derived hashes exist in DuckDB too,
-# so minhash/simhash signatures get FULL oracle checks (the xxhash64
-# simhash above stays rows-only as the faster production tier; the minhash
-# candidates query switched to the md5 tier outright in r7).
+# Token-set signatures on the md5 kernel: the oracle reproduces each
+# 60-bit md5 prefix directly (no XXH64 replay, no gram-length guard), over
+# the same DISTINCT token set.
 
 
 @query(
@@ -462,9 +454,10 @@ def simhash_fingerprints(spark, sf_dir):
     """,
 )
 def minhash_md5_signatures(spark, sf_dir):
-    return D.minhash_signatures_md5(table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return D.minhash_signatures(
+        table(spark, sf_dir, "documents"), num_hashes=8, shingle_n=1,
+        kernel="md5",
+    ).orderBy("doc_id")
 
 
 @query(
@@ -496,9 +489,9 @@ def minhash_md5_signatures(spark, sf_dir):
     """,
 )
 def simhash_md5_fingerprints(spark, sf_dir):
-    return D.simhash_signatures_md5(table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return D.simhash_signatures(
+        table(spark, sf_dir, "documents"), shingle_n=1, kernel="md5"
+    ).orderBy("doc_id")
 
 
 # SimHash near-dup PAIRS: fingerprints banded into 4 x 8-bit chunks
@@ -565,8 +558,8 @@ def simhash_md5_fingerprints(spark, sf_dir):
 def simhash_near_pairs(spark, sf_dir):
     # the fingerprint aggregation feeds BOTH sides of the chunk self-join —
     # persist it once instead of recomputing the md5+32-sum pipeline twice
-    fp = D.simhash_signatures_md5(
-        table(spark, sf_dir, "documents"), shingle_n=2
+    fp = D.simhash_signatures(
+        table(spark, sf_dir, "documents"), shingle_n=2, kernel="md5"
     ).persist()
     # posexplode: pos IS the chunk index (same rows as the struct-array
     # explode this replaces), parsed JVM-side in one round trip (r13)
@@ -654,12 +647,11 @@ def dedup_clusters(spark, sf_dir):
 
 # Ingestion-time dedup: the new half of the corpus deduped against a
 # signature store built from the historical half — no historical text is
-# re-shingled. The declared query runs the PORTABLE md5 banding tier so the
-# whole store+batch candidate derivation is oracle-checked in DuckDB (same
-# md5 kernel, same 3-gram shingles, same bucket caps); the xxhash64
-# production tier shares the identical combinator
-# (operators/dedup.py::incremental_bucket_candidates) and keeps its
-# full-vs-incremental pair-set equivalence proof in
+# re-shingled. Runs operators/dedup.py::incremental_lsh_candidates on the
+# md5 kernel so the whole store+batch candidate derivation replays in
+# DuckDB through the shared _md5_banding_ctes prefix (same 3-gram
+# shingles, same bucket caps); the full-vs-incremental pair-set
+# equivalence is tested on both kernels in
 # tests/test_corpus.py::test_incremental_lsh_matches_full_corpus_run.
 
 _INCR_HASHES, _INCR_BANDS = 8, 4
@@ -689,13 +681,14 @@ def incremental_dedup_candidates(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    store = D.minhash_band_buckets_md5(
-        old, num_hashes=_INCR_HASHES, bands=_INCR_BANDS
+    store = D.minhash_band_buckets(
+        old, num_hashes=_INCR_HASHES, bands=_INCR_BANDS, shingle_n=3,
+        kernel="md5",
     )
-    nb = D.minhash_band_buckets_md5(
-        new, num_hashes=_INCR_HASHES, bands=_INCR_BANDS
+    pairs, _additions = D.incremental_lsh_candidates(
+        new, store, num_hashes=_INCR_HASHES, bands=_INCR_BANDS, shingle_n=3,
+        kernel="md5",
     )
-    pairs, _additions = D.incremental_bucket_candidates(nb, store)
     return pairs.orderBy("id_a", "id_b")
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from skiliopay_datapipeline_customer_spark.io import table
@@ -207,11 +208,13 @@ def test_shard_assignments_layout_invariants(spark):
     assert sorted(map(tuple, again)) == sorted(map(tuple, out))
 
 
-def test_incremental_lsh_matches_full_corpus_run(spark, sf_dir, tmp_path):
-    """Dedup-at-ingestion equivalence: band buckets of the historical half
-    persisted as the signature store, then the new half deduped against it
-    must produce EXACTLY the full-corpus candidate pairs that touch a new
-    document — same pairs, same n_bands — without re-reading old text."""
+@pytest.mark.parametrize("kernel", ["xxhash64", "md5"])
+def test_incremental_lsh_matches_full_corpus_run(spark, sf_dir, tmp_path, kernel):
+    """Dedup-at-ingestion equivalence, on each hash kernel: band buckets of
+    the historical half persisted as the signature store, then the new half
+    deduped against it must produce EXACTLY the full-corpus candidate pairs
+    that touch a new document — same pairs, same n_bands — without
+    re-reading old text."""
     from pyspark.sql import functions as F
 
     from skiliopay_datapipeline_customer_spark.io import table
@@ -226,13 +229,15 @@ def test_incremental_lsh_matches_full_corpus_run(spark, sf_dir, tmp_path):
     new = docs.filter(F.col("doc_id") % 2 == 1)
 
     store_dir = str(tmp_path / "sig_store")
-    minhash_band_buckets(old).write.partitionBy("band").parquet(store_dir)
+    minhash_band_buckets(old, kernel=kernel).write.partitionBy("band").parquet(
+        store_dir
+    )
     store = spark.read.parquet(store_dir)
 
-    pairs, additions = incremental_lsh_candidates(new, store)
+    pairs, additions = incremental_lsh_candidates(new, store, kernel=kernel)
     got = {(r.id_a, r.id_b): r.n_bands for r in pairs.collect()}
 
-    full = minhash_lsh_candidates(docs)
+    full = minhash_lsh_candidates(docs, kernel=kernel)
     want = {
         (r.id_a, r.id_b): r.n_bands
         for r in full.collect()
@@ -244,41 +249,8 @@ def test_incremental_lsh_matches_full_corpus_run(spark, sf_dir, tmp_path):
     additions.write.mode("append").partitionBy("band").parquet(store_dir)
     assert (
         spark.read.parquet(store_dir).count()
-        == minhash_band_buckets(docs).count()
+        == minhash_band_buckets(docs, kernel=kernel).count()
     )
-
-
-def test_md5_tier_full_corpus_matches_incremental(spark, sf_dir):
-    """Same equivalence contract on the PORTABLE md5 tier (the r7
-    oracle-checked declared query): the full-corpus run of
-    `minhash_lsh_candidates_md5` restricted to pairs touching an odd doc
-    must equal the incremental run of the odd half against the even half's
-    band buckets — proving the new full-corpus function and the
-    store-backed ingestion tier share one candidate semantics."""
-    from pyspark.sql import functions as F
-
-    from skiliopay_datapipeline_customer_spark.io import table
-    from skiliopay_datapipeline_customer_spark.operators.dedup import (
-        incremental_bucket_candidates,
-        minhash_band_buckets_md5,
-        minhash_lsh_candidates_md5,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    store = minhash_band_buckets_md5(old, num_hashes=8, bands=4)
-    nb = minhash_band_buckets_md5(new, num_hashes=8, bands=4)
-    pairs, _ = incremental_bucket_candidates(nb, store)
-    got = {(r.id_a, r.id_b): r.n_bands for r in pairs.collect()}
-
-    full = minhash_lsh_candidates_md5(docs, num_hashes=8, bands=4)
-    want = {
-        (r.id_a, r.id_b): r.n_bands
-        for r in full.collect()
-        if r.id_a % 2 == 1 or r.id_b % 2 == 1
-    }
-    assert got == want and len(got) > 0
 
 
 def test_group_capped_sample_caps_and_keeps_small_groups(spark):
@@ -333,7 +305,8 @@ def test_fan_out_rebalances_narrow_scans_without_changing_results(spark, sf_dir)
 
 def test_minhash_lsh_recall_vs_exact_jaccard_tier(spark, sf_dir):
     """The text-tier twin of the embedding recall gate: banded MinHash
-    candidates must recover >= 0.9 of the exact 3-gram-shingle Jaccard
+    candidates, on each hash kernel, must recover >= 0.9 of the exact
+    3-gram-shingle Jaccard
     near-dup pairs (threshold 0.9; at b=8 r=4 the analytic candidate
     probability at J=0.9 is 1-(1-0.9^4)^8 ~ 0.9998)."""
     from skiliopay_datapipeline_customer_spark.io import table
@@ -345,9 +318,11 @@ def test_minhash_lsh_recall_vs_exact_jaccard_tier(spark, sf_dir):
         for r in D.ngram_jaccard_pairs(docs, threshold=0.9, shingle_n=3).collect()
     }
     assert exact, "fixture must exercise real near-dup pairs"
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_candidates(docs).collect()
-    }
-    recall = len(cand & exact) / len(exact)
-    assert recall >= 0.9, f"text-tier recall {recall:.3f} below 0.9"
+    # one exact tier, both hash kernels
+    for kernel in ("xxhash64", "md5"):
+        cand = {
+            (r["id_a"], r["id_b"])
+            for r in D.minhash_lsh_candidates(docs, kernel=kernel).collect()
+        }
+        recall = len(cand & exact) / len(exact)
+        assert recall >= 0.9, f"{kernel} recall {recall:.3f} below 0.9"

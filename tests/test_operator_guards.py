@@ -38,11 +38,31 @@ def test_banding_rejects_indivisible_hash_family(spark, sf_dir):
     )
 
     docs = table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError, match="divisible"):
-        minhash_band_buckets(docs, num_hashes=32, bands=6)
+    for kernel in ("xxhash64", "md5"):
+        with pytest.raises(ValueError, match="divisible"):
+            minhash_band_buckets(docs, num_hashes=32, bands=6, kernel=kernel)
     emb = table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="divisible"):
         lsh_dup_pairs(emb, num_planes=16, bands=6)
+
+
+def test_unknown_hash_kernel_names_the_known_kernels(spark):
+    """A misspelled kernel fails at build time, naming the valid choices,
+    instead of silently falling back to a default hash."""
+    from skiliopay_datapipeline_customer_spark.operators import dedup as D
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    for build in (
+        D.minhash_signatures,
+        D.minhash_band_buckets,
+        D.minhash_lsh_candidates,
+        D.simhash_signatures,
+    ):
+        with pytest.raises(ValueError, match="xxhash64, md5") as err:
+            build(docs, kernel="murmur3")
+        assert "'murmur3'" in str(err.value)
+    with pytest.raises(ValueError, match="xxhash64, md5"):
+        D.incremental_lsh_candidates(docs, docs, kernel="murmur3")
 
 
 def test_asof_join_tie_on_right_side_is_deterministic(spark):

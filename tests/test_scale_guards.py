@@ -24,15 +24,18 @@ def _identical_docs(spark, n=200):
     )
 
 
-def test_minhash_lsh_bucket_cap_bounds_degenerate_corpus(spark):
-    docs = _identical_docs(spark, 200)
+@pytest.mark.parametrize("kernel,n_docs", [("xxhash64", 200), ("md5", 120)])
+def test_minhash_lsh_bucket_cap_bounds_degenerate_corpus(spark, kernel, n_docs):
+    docs = _identical_docs(spark, n_docs)
     # every doc lands in the same bucket in every band: capped run drops the
     # degenerate buckets entirely (exact-dedup tier owns identical content)
-    capped = D.minhash_lsh_candidates(docs, max_bucket_size=100)
+    capped = D.minhash_lsh_candidates(docs, max_bucket_size=100, kernel=kernel)
     assert capped.count() == 0
-    # without the cap the same corpus goes quadratic: C(200,2) pairs
-    uncapped = D.minhash_lsh_candidates(docs, max_bucket_size=10_000)
-    assert uncapped.count() == 200 * 199 // 2
+    # without the cap the same corpus goes quadratic: C(n, 2) pairs
+    uncapped = D.minhash_lsh_candidates(
+        docs, max_bucket_size=10_000, kernel=kernel
+    )
+    assert uncapped.count() == n_docs * (n_docs - 1) // 2
 
 
 def test_minhash_lsh_cap_no_change_on_normal_corpus(spark, sf_dir):
@@ -42,18 +45,6 @@ def test_minhash_lsh_cap_no_change_on_normal_corpus(spark, sf_dir):
     a = {(r["id_a"], r["id_b"], r["n_bands"]) for r in default.collect()}
     b = {(r["id_a"], r["id_b"], r["n_bands"]) for r in huge_cap.collect()}
     assert a == b
-
-
-def test_minhash_md5_tier_bucket_cap_bounds_degenerate_corpus(spark):
-    """The r7 oracle-checked md5 tier shares capped_bucket_pairs with the
-    xxhash64 tier — same degenerate-mass guard: a corpus of identical docs
-    is dropped entirely under the cap (exact dedup owns it), quadratic
-    without."""
-    docs = _identical_docs(spark, 120)
-    capped = D.minhash_lsh_candidates_md5(docs, max_bucket_size=100)
-    assert capped.count() == 0
-    uncapped = D.minhash_lsh_candidates_md5(docs, max_bucket_size=10_000)
-    assert uncapped.count() == 120 * 119 // 2
 
 
 def test_cosine_dup_pairs_row_cap_enforced(spark, sf_dir):
@@ -311,7 +302,8 @@ def test_word_shingles_short_docs_match_oracle_semantics(spark):
     got = {
         r["doc_id"]: sorted(r["sh"])
         for r in df.select(
-            "doc_id", D.word_shingles(F.col("text"), 3).alias("sh")
+            "doc_id",
+            D.shingles_from_tokens(D.tokens(F.col("text")), 3).alias("sh"),
         ).collect()
     }
     con = duckdb.connect()
